@@ -1,10 +1,9 @@
-"""Measurement plumbing: spans, process-tree RSS, Spark job counts and
-the Spark event log.
+"""Measurement plumbing: catalog spans, process-tree RSS, Spark job
+counts and the Spark event log.
 
-Spans are recorded only from the benchmark's side of each layer
-boundary (around calls into the package); nothing inside the package is
-instrumented. ``SinkCatalog`` methods are wrapped for the traced run
-only, so the untraced run measures the unmodified program.
+Nothing inside the package is instrumented. The traced run wraps the
+``SinkCatalog`` methods from the benchmark's side of that boundary; the
+untraced run measures the unmodified program.
 """
 
 from __future__ import annotations
@@ -15,61 +14,43 @@ import json
 import os
 import threading
 import time
-from contextlib import contextmanager
 
 
 class Tracer:
-    """In-memory spans: (name, start, end, parent name). Thread-safe; the
-    parent is the innermost open span of the recording thread."""
+    """Call counts and summed seconds per span name, by start time.
+    Thread-safe: the routing fan-out calls the catalog from several
+    threads at once."""
 
-    def __init__(self, enabled: bool):
-        self.enabled = enabled
-        self.spans: list[tuple[str, float, float, str | None]] = []
+    def __init__(self):
+        self.spans: list[tuple[str, float, float]] = []
         self._lock = threading.Lock()
-        self._local = threading.local()
-
-    @contextmanager
-    def span(self, name: str):
-        if not self.enabled:
-            yield
-            return
-        stack = self._local.__dict__.setdefault("stack", [])
-        parent = stack[-1] if stack else None
-        stack.append(name)
-        t0 = time.perf_counter()
-        try:
-            yield
-        finally:
-            t1 = time.perf_counter()
-            stack.pop()
-            with self._lock:
-                self.spans.append((name, t0, t1, parent))
 
     def totals(self, t0: float, t1: float) -> dict[str, tuple[int, float]]:
         """(calls, summed seconds) per span name, for spans starting in [t0, t1)."""
         out: dict[str, tuple[int, float]] = {}
         with self._lock:
-            for name, s, e, _ in self.spans:
+            for name, s, e in self.spans:
                 if t0 <= s < t1:
                     n, secs = out.get(name, (0, 0.0))
                     out[name] = (n + 1, secs + e - s)
         return out
 
     def wrap(self, owner, attr: str, name: str):
-        """Replace ``owner.attr`` by a spanned wrapper; returns an undo callable."""
+        """Replace ``owner.attr`` by a timed wrapper; returns an undo callable."""
         orig = getattr(owner, attr)
 
         @functools.wraps(orig)
         def spanned(*args, **kwargs):
-            with self.span(name):
+            t0 = time.perf_counter()
+            try:
                 return orig(*args, **kwargs)
+            finally:
+                t1 = time.perf_counter()
+                with self._lock:
+                    self.spans.append((name, t0, t1))
 
         setattr(owner, attr, spanned)
         return lambda: setattr(owner, attr, orig)
-
-    def dump(self, path: str) -> None:
-        with open(path, "w") as f:
-            json.dump([{"name": n, "start": s, "end": e, "parent": p} for n, s, e, p in self.spans], f)
 
 
 def _proportional_bytes(pid: int) -> int:

@@ -115,11 +115,20 @@ class Ingest(Workload):
     force: bool
 
     def expect(self, oracle) -> None:
-        days = self.checked_days()
-        self.want_counts = {k: v for k, v in oracle.sink_counts().items() if k[1] in days}
-        self.want_metrics = [r for r in oracle.metrics_sink() if r[0] in days]
-        self.records = sum(self.data["rows_per_day"][d] for d in days)
-        self.input_bytes = sum(self.data["bytes_per_day"][d] for d in days)
+        # answers for every day of the corpus; checks pick the days they parse
+        self.want_counts = oracle.sink_counts()
+        self.want_metrics = oracle.metrics_sink()
+
+    @property
+    def records(self) -> int:
+        return sum(self.data["rows_per_day"][d] for d in self.checked_days())
+
+    @property
+    def input_bytes(self) -> int:
+        return sum(self.data["bytes_per_day"][d] for d in self.checked_days())
+
+    def run_id(self, i: int) -> str:
+        return f"{self.name}-{i}"
 
     def run(self, run_id: str, sinks=None) -> dict:
         from stash_log_parser_spark.plans.routing import run_pipeline
@@ -129,14 +138,20 @@ class Ingest(Workload):
         )
 
     def ops(self, i: int):
-        return [("run_pipeline", lambda: self.run(f"iter-{i}"))]
+        return [("run_pipeline", lambda: self.run(self.run_id(i)))]
 
     def check(self, name: str, i: int, summary: dict) -> str | None:
         days = self.checked_days()
         return (
             _mismatch("days_parsed", summary.get("days_parsed"), len(days))
-            or _mismatch("lineage", _lineage(self.sinks, f"iter-{i}"), self.want_counts)
-            or _mismatch("metrics sink", _metrics_rows(self.sinks, days), self.want_metrics)
+            or _mismatch(
+                "lineage",
+                _lineage(self.sinks, self.run_id(i)),
+                {k: v for k, v in self.want_counts.items() if k[1] in days},
+            )
+            or _mismatch(
+                "metrics sink", _metrics_rows(self.sinks, days), [r for r in self.want_metrics if r[0] in days]
+            )
         )
 
     def record_layers(self, name: str, summary: dict) -> None:
@@ -171,7 +186,7 @@ class IngestFull(Ingest):
 
     name = "ingest_full"
     force = True
-    REQUESTS_PER_DAY, DAYS, SHARDS_PER_DAY = 3000, 3, 4
+    REQUESTS_PER_DAY, DAYS, SHARDS_PER_DAY = 8000, 3, 4
 
     def generate(self) -> None:
         self.data = inputs.write_log_corpus(
@@ -203,6 +218,16 @@ class IngestDaily(Ingest):
         )
         self.sinks = self.ctx.path("sinks")
         self.newest = max(self.data["rows_per_day"])
+
+    @classmethod
+    def over(cls, full: Ingest) -> IngestDaily:
+        """The daily run on the sink root another ingest workload has
+        committed, with that workload's inputs and expected answers."""
+        daily = cls(full.ctx)
+        daily.data, daily.sinks = full.data, full.sinks
+        daily.want_counts, daily.want_metrics = full.want_counts, full.want_metrics
+        daily.newest = max(full.data["rows_per_day"])
+        return daily
 
     def checked_days(self) -> set[str]:
         return {self.newest}
@@ -271,22 +296,26 @@ class LogQueries(Workload):
 
 class CorpusOps(Workload):
     """Training-data operator leaves from ``queries()`` over seeded
-    documents / embeddings tables, plus the Adamic-Adar graph leaf over
-    the seeded log corpus."""
+    documents / embeddings tables. The graph leaf reads the package's
+    fixed log fixture (``__spark_entry__.CORPUS``, 3 days x 2000
+    requests), which the oracle reads too; it is the one input here
+    that does not change with the seed."""
 
     name = "corpus_ops"
-    DOCS, VECTORS, LOG_REQUESTS_PER_DAY, LOG_DAYS = 500, 500, 2000, 3
+    DOCS, VECTORS = 500, 500
 
     def generate(self) -> None:
+        import pyarrow.parquet as pq
+
+        import __spark_entry__ as E
+
         tables = self.ctx.path("input", "tables")
         os.makedirs(tables, exist_ok=True)
         self.tables = tables
+        self.data = {}  # no generated log corpus: the oracle keeps the fixture path
         n_docs = inputs.write_documents(os.path.join(tables, "documents.parquet"), self.DOCS, self.ctx.seed)
         n_vec = inputs.write_embeddings(os.path.join(tables, "embeddings.parquet"), self.VECTORS, self.ctx.seed)
-        self.data = inputs.write_log_corpus(
-            self.ctx.path("input", "log"), self.LOG_REQUESTS_PER_DAY, range(self.LOG_DAYS), self.ctx.seed, 1
-        )
-        size = {"emb": n_vec, "docs": n_docs, "log": self.data["rows"]}
+        size = {"emb": n_vec, "docs": n_docs, "log": pq.read_metadata(E._ensure_corpus()).num_rows}
         self.records = sum(size[leaf.split("_")[0]] for _, leaf in LEAVES)
 
     def expect(self, oracle) -> None:
@@ -300,29 +329,11 @@ class CorpusOps(Workload):
     def oracle_tables(self) -> dict[str, str]:
         return {t: os.path.join(self.tables, f"{t}.parquet") for t in ("documents", "embeddings")}
 
-    def _graph_leaf(self):
-        # queries()["log_repo_adamic_adar"] reads the repository's fixed
-        # fixture corpus; the same operator chain runs here on the
-        # seeded corpus instead.
-        from stash_log_parser_spark.functions.parse import parse_corpus
-        from stash_log_parser_spark.operators.analyses import capped_incidence
-        from stash_log_parser_spark.operators.graph import adamic_adar
-
-        raw = self.ctx.spark.read.parquet(self.data["corpus"])
-        return adamic_adar(capped_incidence(parse_corpus(raw, slim=True), 20), top_pairs=30)
-
     def ops(self, i: int):
         import __spark_entry__ as E
 
         qs = E.queries()
-        ops = []
-        for module, leaf in LEAVES:
-            if module == "graph":
-                fn = lambda: self._graph_leaf().collect()  # noqa: E731
-            else:
-                fn = lambda leaf=leaf: qs[leaf](self.ctx.spark, self.tables).collect()  # noqa: E731
-            ops.append((leaf, fn))
-        return ops
+        return [(leaf, lambda leaf=leaf: qs[leaf](self.ctx.spark, self.tables).collect()) for _, leaf in LEAVES]
 
     def check(self, name: str, i: int, rows) -> str | None:
         return _mismatch(name, inputs.normalize(tuple(r) for r in rows), self.want[name])
