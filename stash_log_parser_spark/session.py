@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "stash-log-parser-spark",
@@ -75,6 +77,9 @@ def build_session(
         # daemon) costs little and removes the shared-state failure mode.
         .config("spark.python.worker.reuse", os.environ.get("SPARK_GRAFT_WORKER_REUSE", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers import the package from any working directory
+        # (Spark merges this with a PYTHONPATH they already inherit).
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     if shuffle_partitions is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

@@ -8,7 +8,9 @@ falls back to partitioned parquet with
 overwrite-one-day semantics. Both backends share the lineage protocol:
 
 * every committed (sink, day) partition appends one row to the
-  ``_lineage`` table: (sink, day, rows, run_id, committed_at_order);
+  ``_lineage`` table: (sink, day, rows, run_id, committed_at_order),
+  where ``rows`` is counted from the committed files by
+  :meth:`SinkCatalog.written_rows`;
 * a restart consults ``_lineage`` and skips already-committed
   (sink, day) pairs — a partial crash (sink written, lineage not)
   simply rewrites that partition, which is safe because writes are
@@ -126,6 +128,47 @@ class SinkCatalog:
                 .partitionBy("batch", partition_col)
                 .parquet(self._path(sink))
             )
+
+    def written_rows(
+        self, sink: str, days: list | None = None, batch_id: int | None = None
+    ) -> dict:
+        """The one lineage row counter: ``{day: rows}`` a write committed to
+        ``sink``'s ``days`` (0 for a day with no files, as after an
+        all-empty write), or to every ``day=`` partition if ``days`` is
+        None. Parquet sums part-file footers of ``[batch=<id>/]day=<d>``
+        with no Spark job (the backfill batch when a flat write landed in a
+        streaming-layout sink), skipping ``_``/``.`` names as Spark's
+        listing does. Counting committed files, not the write job's rows,
+        means a retried task cannot double-count. Iceberg counts in Spark."""
+        if self.use_iceberg:
+            df = self.read(sink)
+            if batch_id is not None:
+                df = df.filter(F.col("batch") == batch_id)
+            if days is not None:
+                df = df.filter(F.col("day").isin(days))
+            counts = dict(df.groupBy(F.col("day").cast("string")).count().collect())
+            return counts if days is None else {d: counts.get(d, 0) for d in days}
+        import pyarrow.parquet as pq
+
+        def ls(path: str) -> list[str]:
+            return os.listdir(path) if os.path.isdir(path) else []
+
+        root = self._path(sink)
+        if batch_id is None and self._has_batch_layout(sink):
+            batch_id = BACKFILL_BATCH_ID
+        if batch_id is not None:
+            root = os.path.join(root, f"batch={batch_id}")
+        if days is None:
+            days = [n[len("day="):] for n in ls(root) if n.startswith("day=")]
+        counts = {}
+        for d in days:
+            day_dir = os.path.join(root, f"day={d}")
+            counts[d] = sum(
+                pq.read_metadata(os.path.join(day_dir, f)).num_rows
+                for f in ls(day_dir)
+                if not f.startswith(("_", "."))
+            )
+        return counts
 
     def write_bucketed(
         self, df: DataFrame, sink: str, col: str = "doc_id", buckets: int = 64
@@ -315,38 +358,17 @@ class SinkCatalog:
             tbl = f"{self.base}._lineage"
             if not self.spark.catalog.tableExists(tbl):
                 return set()
-            recs = (
-                self.spark.read.table(tbl)
-                .select("sink", "day", "run_id")
-                .distinct()
-                .collect()
-            )
-            rows = [(r.sink, r.day, str(r.run_id)) for r in recs]
-            retracted = {
-                (s, d, r[len("retracted:"):])
-                for s, d, r in rows
-                if r.startswith("retracted:")
-            }
-            return {
-                (s, d)
-                for s, d, r in rows
-                if not r.startswith("retracted:") and (s, d, r) not in retracted
-            }
-        path = self._path("_lineage")
-        if not os.path.isdir(path):
-            return set()
-        import pyarrow.dataset as ds
+            recs = self.spark.read.table(tbl).select("sink", "day", "run_id").distinct()
+            rows = [(r.sink, r.day, str(r.run_id)) for r in recs.collect()]
+        else:
+            path = self._path("_lineage")
+            if not os.path.isdir(path):
+                return set()
+            import pyarrow.dataset as ds
 
-        t = ds.dataset(path, format="parquet").to_table(
-            columns=["sink", "day", "run_id"]
-        )
-        rows = list(
-            zip(
-                t.column("sink").to_pylist(),
-                t.column("day").to_pylist(),
-                (str(r) for r in t.column("run_id").to_pylist()),
-            )
-        )
+            t = ds.dataset(path, format="parquet").to_table(columns=["sink", "day", "run_id"])
+            sinks, days, runs = (t.column(c).to_pylist() for c in ("sink", "day", "run_id"))
+            rows = [(s, d, str(r)) for s, d, r in zip(sinks, days, runs)]
         # A retraction SUPERSEDES its original even if the original row
         # is still on disk: retract() writes the rewritten log before
         # deleting the old files, so a crash in between leaves both the

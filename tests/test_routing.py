@@ -138,8 +138,8 @@ def test_resume_reuses_stage_without_reparse(spark, corpus_path, tmp_path):
 
 def test_sql_decode_pipeline_equals_default(spark, corpus_path, tmp_path):
     """Arrow-decode and pure-JVM-decode stage builds produce
-    byte-identical sink contents (the pipeline defaults to the JVM path
-    for the tokens-through stage; the Arrow path must stay equivalent)."""
+    byte-identical sink contents (the pipeline defaults to the Arrow
+    decode stage; the opt-in JVM path must stay equivalent)."""
     out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
     run_pipeline(spark, corpus_path, out_a, run_id="arrow", use_sql_decode=False)
     run_pipeline(spark, corpus_path, out_b, run_id="sql", use_sql_decode=True)
@@ -350,6 +350,28 @@ def test_all_malformed_corpus_zero_row_sinks_and_lineage(spark, tmp_path):
     assert [(str(r.day), r.rows) for r in lin] == [("2012-09-08", 0)]
     s2 = run_pipeline(spark, inp, out, run_id="bad-resume")
     assert s2["days_parsed"] == 0
+
+
+def test_undated_source_is_rejected_before_any_write(spark, tmp_path):
+    """A source name without a YYYY-MM-DD date has no day partition: the
+    run must refuse it up front, not route it to a null partition and
+    commit lineage rows for day "" that a resume would then skip."""
+    import os
+
+    rows = [
+        (f"d{i}", [104, 105], 2, src)
+        for i, src in enumerate(
+            ["atlassian-stash-access.log", "atlassian-stash-access-2012-09-08.0.log"]
+        )
+    ]
+    inp = str(tmp_path / "undated.parquet")
+    spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    ).write.parquet(inp)
+    out = str(tmp_path / "sinks")
+    with pytest.raises(ValueError, match="atlassian-stash-access.log"):
+        run_pipeline(spark, inp, out, run_id="undated")
+    assert not os.path.exists(os.path.join(out, "_lineage"))
 
 
 def test_compact_partitions_preserves_rows(spark, corpus_path, tmp_path):

@@ -2,7 +2,9 @@
 "packaged for spark-submit --py-files"): build dist/pipeline.zip with
 tools/package.py, launch a REAL spark-submit subprocess against a tiny
 generated corpus with the repo dir deliberately NOT on PYTHONPATH, and
-check the pipeline runs end-to-end from the zip alone."""
+check the pipeline runs end-to-end from the zip alone. A second
+subprocess checks that the Python workers import the package from any
+working directory."""
 
 import json
 import os
@@ -64,3 +66,37 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     sinks = set(os.listdir(out_dir))
     assert "metrics" in sinks and "_lineage" in sinks
     assert "git_operations" in sinks and "request_durations" in sinks
+
+
+def test_workers_import_package_from_any_directory(tmp_path):
+    """The Spark application imports the package through sys.path
+    alone (working directory outside the repo, no PYTHONPATH);
+    build_session must ship the package's location so the Python
+    workers running the Arrow decode stage can import it too."""
+    script = f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from stash_log_parser_spark.functions.parse import parse_corpus
+from stash_log_parser_spark.session import build_session
+
+spark = build_session(master="local[2]", shuffle_partitions=2)
+line = list(b"10.0.0.5 | ssh | o2x3x1 | jdoe | 2012-09-08 00:02:07,000 | x | - | - | - | - |")
+rows = [(f"d{{i}}", line, len(line), "atlassian-stash-access-2012-09-08.0.log") for i in range(8)]
+df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int, source string")
+print("parsed", parse_corpus(df).count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
+    env.pop("PYTHONPATH", None)
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "parsed 8" in r.stdout.splitlines()

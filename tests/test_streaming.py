@@ -226,6 +226,20 @@ def _sink_rows(spark, root, name, drop=("batch",)):
     )
 
 
+def _lineage_vs_partitions(spark, root, run_id, batch, sinks):
+    """{(sink, day): rows} of ``run_id``'s lineage rows for ``sinks``,
+    after checking each one against a Spark count of the sink's
+    ``batch=<batch>/day=<d>`` partition."""
+    from stash_log_parser_spark.sources.catalog import SinkCatalog
+
+    lin = SinkCatalog(spark, root).read("_lineage").filter(F.col("run_id") == run_id)
+    got = {(r.sink, r.day): r.rows for r in lin.collect() if r.sink in sinks}
+    for (sink, day), n in got.items():
+        part = spark.read.parquet(f"{root}/{sink}/batch={batch}/day={day}")
+        assert n == part.count(), (run_id, sink, day, n)
+    return got
+
+
 def test_streaming_ingest_equals_batch_pipeline(spark, day_aligned_dir, tmp_path):
     """foreachBatch ingest (one day per micro-batch) writes exactly the
     batch pipeline's sink rows, for EVERY sink including the
@@ -239,6 +253,14 @@ def test_streaming_ingest_equals_batch_pipeline(spark, day_aligned_dir, tmp_path
         max_files_per_trigger=1,
     )
     assert prog["batches"] == 3 and prog["rows"] > 0
+    # every batch commits one lineage row per (sink, day) it wrote, and
+    # each equals that batch's partition row count
+    committed = {
+        key
+        for b in range(3)
+        for key in _lineage_vs_partitions(spark, sout, f"stream-batch-{b}", b, SINKS)
+    }
+    assert len(committed) == len(SINKS) * 3
     bout = str(tmp_path / "batch_sinks")
     run_pipeline(spark, day_aligned_dir, bout, run_id="twin")
     for name in SINKS:
@@ -412,6 +434,11 @@ def test_auto_backfill_on_partially_spanning_days(spark, day_aligned_dir, tmp_pa
     committed = SinkCatalog(spark, sout).committed()
     for n in ORDER_SENSITIVE_SINKS:
         assert (n, split_day) in committed
+    # ... with the row count of the batch=-1 partition it wrote
+    backfilled = _lineage_vs_partitions(
+        spark, sout, "stream-backfill", -1, ORDER_SENSITIVE_SINKS
+    )
+    assert backfilled.keys() == {(n, split_day) for n in ORDER_SENSITIVE_SINKS}
 
     bout = str(tmp_path / "batch_twin")
     run_pipeline(spark, day_aligned_dir, bout, run_id="twin")

@@ -8,10 +8,12 @@ order-insensitive value multiset. Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
 def norm_cell(v):

@@ -9,10 +9,12 @@ REGISTRY-INDEX markers.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 BEGIN = "<!-- REGISTRY-INDEX:BEGIN (generated by tools/gen_registry_index.py) -->"
 END = "<!-- REGISTRY-INDEX:END -->"
@@ -46,7 +48,7 @@ def main() -> None:
     lines += ["", END]
     block = "\n".join(lines)
 
-    with open("COVERAGE.md") as f:
+    with open(os.path.join(_REPO, "COVERAGE.md")) as f:
         text = f.read()
     if BEGIN in text:
         text = re.sub(
@@ -57,7 +59,7 @@ def main() -> None:
         )
     else:
         text = text.rstrip() + "\n\n" + block + "\n"
-    with open("COVERAGE.md", "w") as f:
+    with open(os.path.join(_REPO, "COVERAGE.md"), "w") as f:
         f.write(text)
     print(f"wrote registry index: {len(qs)} queries")
 
